@@ -1,10 +1,13 @@
-.PHONY: test bench scaling dist clean
+.PHONY: test bench perfbench scaling dist clean
 
 test:
 	python -m pytest tests/ -x -q
 
 bench:
 	python bench.py
+
+perfbench:
+	python3 -m pytest perfbench -q
 
 scaling:
 	python bench/scaling.py

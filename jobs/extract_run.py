@@ -1,8 +1,9 @@
 """spark-submit entry point for the extraction pipeline.
 
-Local smoke:
+Local smoke (without --parallelism, the url exchange is sized from
+the data by adaptive query execution; see RunConfig):
     python jobs/extract_run.py --input pages.parquet --output /tmp/out \\
-        --run-id r1 --parallelism 32
+        --run-id r1
 
 Cluster (BASELINE.json:6 "spark-submit --py-files on multi-executor
 clusters at N and 4N executors"):
@@ -35,7 +36,10 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default="run")
-    ap.add_argument("--parallelism", type=int, default=32)
+    ap.add_argument(
+        "--parallelism", type=int, default=None,
+        help="url-exchange partitions (default: sized from the data by AQE)",
+    )
     ap.add_argument("--num-salts", type=int, default=64)
     ap.add_argument("--langs", default=None, help="comma-separated allowlist")
     ap.add_argument("--no-resume", action="store_true")

@@ -27,6 +27,9 @@ import pandas as pd
 from readembedability_spark.schemas import EXTRACTED_SCHEMA
 
 _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
+#: input html per output frame: bounds a worker's memory by the chunk,
+#: whatever the partition or Arrow batch size
+CHUNK_BYTES = 256 * 1024
 
 def _ensure_workers_can_import(spark) -> None:
     """Ship the package to python workers once per SparkContext.
@@ -100,25 +103,27 @@ def make_extract_batches(run_id: str, metrics_dir: str | None):
 
         t0 = time.monotonic()
         n_rows = n_ok = n_error = bytes_in = 0
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            tss = pdf["warc_ts"].tolist()
-            htmls = pdf["html"].tolist()
-            salts = pdf["salt"].tolist() if "salt" in pdf.columns else [0] * len(urls)
-            cols: dict[str, list] = {c: [] for c in _OUT_COLS}
-            for url, ts, html, salt in zip(urls, tss, htmls, salts):
-                if html is not None:
-                    bytes_in += len(html)
-                row = extract_page(url, html)
-                row["warc_ts"] = ts
-                row["salt"] = int(salt)
-                n_rows += 1
-                if row["status"] == "ok":
-                    n_ok += 1
-                elif row["status"] == "parse_error":
-                    n_error += 1
-                for c in _OUT_COLS:
-                    cols[c].append(row[c])
+        cols: dict[str, list] = {c: [] for c in _OUT_COLS}
+        chunk_bytes = 0
+        for url, ts, html, salt in _input_rows(batches):
+            if html is not None:
+                bytes_in += len(html)
+                chunk_bytes += len(html)
+            row = extract_page(url, html)
+            row["warc_ts"] = ts
+            row["salt"] = int(salt)
+            n_rows += 1
+            if row["status"] == "ok":
+                n_ok += 1
+            elif row["status"] == "parse_error":
+                n_error += 1
+            for c in _OUT_COLS:
+                cols[c].append(row[c])
+            if chunk_bytes >= CHUNK_BYTES:
+                yield pd.DataFrame(cols, columns=_OUT_COLS)
+                cols = {c: [] for c in _OUT_COLS}
+                chunk_bytes = 0
+        if cols["url"]:
             yield pd.DataFrame(cols, columns=_OUT_COLS)
         if metrics_dir:
             ctx = TaskContext.get()
@@ -137,6 +142,14 @@ def make_extract_batches(run_id: str, metrics_dir: str | None):
             )
 
     return extract_batches
+
+
+def _input_rows(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    """(url, warc_ts, html, salt) for every row of every Arrow batch."""
+    for pdf in batches:
+        urls = pdf["url"].tolist()
+        salts = pdf["salt"].tolist() if "salt" in pdf.columns else [0] * len(urls)
+        yield from zip(urls, pdf["warc_ts"].tolist(), pdf["html"].tolist(), salts)
 
 
 def _write_metrics(metrics_dir: str, record: dict) -> None:

@@ -30,10 +30,22 @@ from readembedability_spark.sources.pages import prefilter, read_pages
 
 @dataclass
 class RunConfig:
+    """One extraction run.
+
+    ``parallelism`` is the partition count of the url-hash exchange, and
+    so the number of extract tasks. ``None`` (the default) sizes it from
+    the data: adaptive query execution merges the
+    ``spark.sql.shuffle.partitions`` hash buckets by their shuffle bytes,
+    e.g. 4 tasks for ~20 MB of html on 4 cores (with AQE off, Spark
+    keeps ``spark.sql.shuffle.partitions``). An int fixes the count. Few
+    large tasks beat many small ones because each task pays a fixed
+    Python-worker and JVM cost; see ``operators.salt``.
+    """
+
     pages_path: str
     out_dir: str
     run_id: str = "run"
-    parallelism: int = 32
+    parallelism: int | None = None
     num_salts: int = 64
     langs: list | None = None
     dedup: bool = True
@@ -92,6 +104,10 @@ def run_extract(spark: SparkSession, cfg: RunConfig) -> dict:
     # the accumulated output, which costs O(total table) per incremental
     # run at 10^12 rows and would mark prior runs' buckets as this run's
     pending = _pending_buckets(spark, cfg) if cfg.resume else []
+    # one metrics file per extract task: drop the previous call's, or a
+    # call with fewer tasks would also count the files it did not write
+    for stale in Path(_metrics_dir(cfg)).glob("part-*.json"):
+        stale.unlink()
     extracted.write.mode("append").parquet(out_path)
     # checkpoint AFTER the output commit (crash before this line → re-run)
     if cfg.resume:

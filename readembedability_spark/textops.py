@@ -643,9 +643,8 @@ def q_dedup_recall(spark, sf_dir):
         pint.join(za, "a").join(zb, "b").filter(jac >= 0.2).select("a", "b")
     )
     inter = _pair_intersections_with_profiles(prof)
-    vjac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
     lsh = (
-        inter.filter(vjac >= 0.2)
+        inter.filter(jac >= 0.2)
         .filter((F.col("a") < p) | (F.col("b") < p))
         .select("a", "b")
     )

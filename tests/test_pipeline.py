@@ -17,7 +17,11 @@ from readembedability_spark.operators.resume import (
     with_bucket,
 )
 from readembedability_spark.operators.salt import salt_repartition
-from readembedability_spark.plans.pipeline import RunConfig, run_extract
+from readembedability_spark.plans.pipeline import (
+    RunConfig,
+    build_extract_df,
+    run_extract,
+)
 from readembedability_spark.sources.pages import prefilter, read_pages
 from readembedability_spark.sources.synth import generate_pages
 
@@ -80,6 +84,7 @@ def test_resume_no_recompute(spark, corpus):
         # all buckets now checkpointed → second run appends nothing
         r2 = run_extract(spark, cfg)
         assert r2["rows_out"] == n1
+        assert r2["rows_processed"] == 0
         # metrics from run2 show zero rows processed
         pending = resume_filter(
             with_bucket(prefilter(read_pages(spark, corpus))),
@@ -179,3 +184,70 @@ def test_checkpoint_marking_independent_of_output(spark, corpus):
         assert set(pend2) == expect
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_adaptive_default_plan_shuffles_once(spark, corpus, tmp_path):
+    """With RunConfig defaults the url exchange is sized by AQE, and the
+    plan keeps its shape: the html crosses one exchange, and there is one
+    dedup window and one Python boundary. (The resume anti-join's
+    done-bucket side has its own tiny exchange, as with a fixed count.)"""
+    import re
+
+    cfg = RunConfig(pages_path=corpus, out_dir=str(tmp_path), run_id="ap")
+    assert cfg.parallelism is None
+    df = build_extract_df(spark, cfg)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+    nodes = plan.split("\n\n")
+    exchanges = [n for n in nodes if re.match(r"\(\d+\) Exchange", n)]
+    (heavy,) = [n for n in exchanges if "html" in n]
+    # by column, not by number: AQE may merge its partitions
+    assert "hashpartitioning(url#" in heavy and "REPARTITION_BY_COL" in heavy
+    assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+
+
+@pytest.fixture(scope="module")
+def adaptive_and_fixed(spark, corpus, tmp_path_factory):
+    """The corpus extracted once with RunConfig defaults and once with
+    a fixed parallelism of 4: name → (config, run_extract result)."""
+    out = {}
+    for name, extra in (("adaptive", {}), ("fixed", {"parallelism": 4})):
+        d = str(tmp_path_factory.mktemp(name))
+        cfg = RunConfig(pages_path=corpus, out_dir=d, run_id="af", **extra)
+        out[name] = (cfg, run_extract(spark, cfg))
+    return out
+
+
+def test_adaptive_default_rows_match_fixed_parallelism(spark, adaptive_and_fixed):
+    def rows(result):
+        return {r["url"]: r for r in spark.read.parquet(result["out_path"]).collect()}
+
+    (_, adaptive), (_, fixed) = adaptive_and_fixed["adaptive"], adaptive_and_fixed["fixed"]
+    assert adaptive["rows_processed"] == fixed["rows_processed"] > 0
+    assert rows(adaptive) == rows(fixed)
+    # AQE merged the hash buckets: fewer tasks, so fewer output files,
+    # than spark.sql.shuffle.partitions
+    files = list(Path(adaptive["out_path"]).glob("part-*.parquet"))
+    assert 0 < len(files) < int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_adaptive_default_rerun_processes_nothing(spark, adaptive_and_fixed):
+    cfg, first = adaptive_and_fixed["adaptive"]
+    again = run_extract(spark, cfg)
+    assert again["rows_processed"] == 0
+    assert again["rows_out"] == first["rows_out"]
+
+
+def test_metrics_count_only_this_call(spark, corpus, tmp_path):
+    """Each call reads back only the metrics files its own tasks wrote:
+    a call with fewer tasks than the one before must not count the
+    files the earlier call left behind."""
+    out = str(tmp_path)
+    first = run_extract(
+        spark, RunConfig(pages_path=corpus, out_dir=out, run_id="mh", parallelism=8)
+    )
+    assert first["rows_processed"] > 0
+    again = run_extract(spark, RunConfig(pages_path=corpus, out_dir=out, run_id="mh"))
+    assert again["rows_processed"] == 0

@@ -97,3 +97,52 @@ def test_byte_identity_at_corpus_scale(spark, tmp_path):
         if got[r["url"]] != h:
             mismatch += 1
     assert mismatch == 0
+
+
+def test_extract_batches_yield_bounded_chunks(tmp_path):
+    """One input batch worth several chunks of html comes back as several
+    output frames (a worker holds one chunk, not the whole partition);
+    together they equal extract_page row by row, and the partition still
+    writes one metrics record over all of its rows."""
+    import gc
+    import json
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from readembedability_spark.operators.extract import (
+        _OUT_COLS,
+        CHUNK_BYTES,
+        make_extract_batches,
+    )
+    from readembedability_spark.sources.synth import generate_pages
+
+    pdf = pq.read_table(generate_pages(tmp_path / "pages.parquet", 600)).to_pandas()
+    pdf["salt"] = range(len(pdf))
+    pdf = pdf[["url", "warc_ts", "html", "salt"]]
+    bytes_in = sum(len(h) for h in pdf["html"] if h is not None)
+    assert bytes_in > 3 * CHUNK_BYTES
+
+    metrics_dir = tmp_path / "metrics"
+    extract = make_extract_batches("chunks", str(metrics_dir))
+    try:
+        frames = list(extract(iter([pdf])))
+    finally:
+        gc.unfreeze()  # the worker function freezes the heap it runs in
+    assert len(frames) > 3
+    assert all(list(f.columns) == _OUT_COLS for f in frames)
+
+    got = [r for f in frames for r in f.to_dict("records")]
+    assert len(got) == len(pdf)
+    for g, (url, ts, html, salt) in zip(got, pdf.itertuples(index=False)):
+        want = extract_page(url, html)
+        want["warc_ts"] = ts
+        want["salt"] = salt
+        for c in _OUT_COLS:
+            # pandas turns a missing timestamp into NaT
+            assert g[c] == want[c] or (want[c] is None and g[c] is pd.NaT), (url, c)
+
+    (record_file,) = metrics_dir.glob("part-*.json")
+    record = json.loads(record_file.read_text(encoding="utf-8"))
+    assert record["n_rows"] == len(pdf)
+    assert record["bytes_in"] == bytes_in
