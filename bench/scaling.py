@@ -46,22 +46,19 @@ PARALLELISM = 128
 
 
 def one_run(master_cores: int, pages_path: str, warmup_path: str) -> tuple[float, int]:
-    from pyspark.sql import SparkSession
-
     from readembedability_spark.plans.pipeline import RunConfig, run_extract
+    from readembedability_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{master_cores}]")
-        .appName(f"scaling-bench-{master_cores}")
-        .config("spark.sql.shuffle.partitions", str(PARALLELISM))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = get_session(
+        f"scaling-bench-{master_cores}",
+        f"local[{master_cores}]",
+        {
+            "spark.sql.shuffle.partitions": str(PARALLELISM),
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     warm_out = tempfile.mkdtemp(prefix="scalewarm-")
     out = tempfile.mkdtemp(prefix="scalebench-")
     try:

@@ -26,30 +26,26 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 import readembedability_spark.textops  # noqa: E402,F401
 from readembedability_spark.flagship import flagship_extract  # noqa: E402
 from readembedability_spark.queries import REGISTRY, release_caches  # noqa: E402
+from readembedability_spark.session import get_session  # noqa: E402
 
 from bench import HEADLINE  # noqa: E402  (read-only import of the frozen list)
 
 
-def _session() -> SparkSession:
+def _session():
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("readembedability-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    return get_session(
+        "readembedability-spark-bench-extra",
+        f"local[{cpus}]",
+        {
+            "spark.sql.shuffle.partitions": str(max(int(cpus), 8)),
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "16g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def main() -> None:

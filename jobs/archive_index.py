@@ -19,7 +19,7 @@ Local smoke (synthesizes a recrawl-bearing pages corpus):
 Cluster (real pages table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --master yarn --conf spark.sql.adaptive.enabled=true \\
+        --master yarn \\
         jobs/archive_index.py --input lake.db.pages --output .../archive
 """
 
@@ -33,8 +33,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 def captures(pages):
     """(surt_key, host, url, ts, digest) — the capture model both
@@ -91,13 +92,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("archive-index")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("archive-index", args.master)
     from readembedability_spark.queries import _persist, release_caches
 
     t0 = time.time()

@@ -26,7 +26,7 @@ Local smoke (synthesizes a defect-bearing capture table):
 Cluster (real capture table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --master yarn --conf spark.sql.adaptive.enabled=true \\
+        --master yarn \\
         jobs/capture_quality.py --input lake.db.captures \\
         --output .../capture_quality
 """
@@ -42,8 +42,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
+from readembedability_spark.session import get_session  # noqa: E402
 from readembedability_spark.textops import (  # noqa: E402
     mojibake_class_from,
     parked_class_from,
@@ -176,13 +176,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("capture-quality")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("capture-quality", args.master)
     from readembedability_spark.queries import release_caches
 
     t0 = time.time()

@@ -18,7 +18,6 @@ Local smoke:
 Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --conf spark.sql.adaptive.enabled=true \\
         jobs/corpus_report.py --input lake.db.documents --output .../report
 """
 
@@ -32,8 +31,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 
 def dedup_rates(spark, docs):
@@ -153,13 +153,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("corpus-report")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("corpus-report", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import filter_funnel_from
 

@@ -19,7 +19,7 @@ Local smoke (synthesizes link-bearing pages from a documents table):
 Cluster (real pages table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --master yarn --conf spark.sql.adaptive.enabled=true \\
+        --master yarn \\
         jobs/crawl_graph.py --input lake.db.pages --output .../graph
 """
 
@@ -33,8 +33,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 #: generic host pattern (the registry queries use the synthesis-shaped
 #: variant; a production url table needs the general form)
@@ -168,13 +169,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("crawl-graph")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("crawl-graph", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import _link_pages, _pagerank
 

@@ -14,7 +14,6 @@ Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --num-executors N --executor-cores 4 \\
-        --conf spark.sql.adaptive.enabled=true \\
         jobs/curate_run.py --input lake.db.documents --output .../curated
 """
 
@@ -31,6 +30,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 
 def curate(
@@ -101,15 +102,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("readembedability-curate")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_session("readembedability-curate", args.master)
     from readembedability_spark.queries import release_caches
 
     docs = spark.read.parquet(args.input)

@@ -10,7 +10,6 @@ clusters at N and 4N executors"):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --num-executors N --executor-cores 4 \\
-        --conf spark.sql.adaptive.enabled=true \\
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=512 \\
         --conf spark.speculation=true \\
         jobs/extract_run.py --input lake.db.pages --output s3://…/out \\
@@ -26,9 +25,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from readembedability_spark.plans.pipeline import RunConfig, run_extract  # noqa: E402
+from readembedability_spark.session import get_session  # noqa: E402
 
 
 def main() -> None:
@@ -46,16 +44,13 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("readembedability-extract")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.speculation", "true")  # straggler re-launch (§4)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_session(
+        "readembedability-extract",
+        args.master,
+        {
+            "spark.speculation": "true",  # straggler re-launch (§4)
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        },
     )
     cfg = RunConfig(
         pages_path=args.input,

@@ -25,7 +25,7 @@ Local smoke (synthesizes link-bearing pages from a documents table):
 Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --master yarn --conf spark.sql.adaptive.enabled=true \\
+        --master yarn \\
         jobs/full_pipeline.py --input lake.db.pages --output .../full
 """
 
@@ -39,7 +39,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from crawl_graph import (  # noqa: E402
@@ -59,6 +58,7 @@ from pretrain_prep import (  # noqa: E402
     shuffle_shards,
     write_shards,
 )
+from readembedability_spark.session import get_session  # noqa: E402
 
 #: authority blend: P(keep) = AUTH_W·(authority / max authority)
 #: + (1 − AUTH_W)·quality — the q_sample_quality DSIR rule with the
@@ -191,13 +191,7 @@ def main() -> None:
     ap.add_argument("--n-shards", type=int, default=8)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("full-pipeline")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("full-pipeline", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import _link_pages, _pagerank
 

@@ -22,7 +22,6 @@ Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --num-executors N --executor-cores 4 \\
-        --conf spark.sql.adaptive.enabled=true \\
         jobs/pretrain_prep.py --input lake.db.documents --output .../prep
 """
 
@@ -36,9 +35,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 #: content blocklist — production supplies its own; the default
 #: matches q_badwords_filter so the job smoke-checks on the synthetic
@@ -317,13 +317,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("pretrain-prep")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("pretrain-prep", args.master)
     from readembedability_spark.queries import release_caches
 
     t0 = time.time()

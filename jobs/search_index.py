@@ -30,7 +30,7 @@ Local smoke (synthesizes a deterministic corpus):
 Cluster (real documents table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
-        --master yarn --conf spark.sql.adaptive.enabled=true \\
+        --master yarn \\
         jobs/search_index.py --input lake.db.documents --output .../idx
 """
 
@@ -44,8 +44,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession, Window  # noqa: E402
+from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from readembedability_spark.session import get_session  # noqa: E402
 
 _WORDS = (
     "key agg row scan slow fast table value part hash merge batch "
@@ -202,13 +204,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("search-index")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_session("search-index", args.master)
     from readembedability_spark.queries import release_caches
 
     t0 = time.time()

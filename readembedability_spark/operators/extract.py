@@ -26,6 +26,7 @@ import pandas as pd
 
 from readembedability_spark.schemas import EXTRACTED_SCHEMA
 
+_IN_COLS = ("url", "warc_ts", "html", "salt")
 _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
 #: input html per output frame: bounds a worker's memory by the chunk,
 #: whatever the partition or Arrow batch size
@@ -147,9 +148,7 @@ def make_extract_batches(run_id: str, metrics_dir: str | None):
 def _input_rows(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
     """(url, warc_ts, html, salt) for every row of every Arrow batch."""
     for pdf in batches:
-        urls = pdf["url"].tolist()
-        salts = pdf["salt"].tolist() if "salt" in pdf.columns else [0] * len(urls)
-        yield from zip(urls, pdf["warc_ts"].tolist(), pdf["html"].tolist(), salts)
+        yield from zip(*(pdf[c].tolist() for c in _IN_COLS))
 
 
 def _write_metrics(metrics_dir: str, record: dict) -> None:
@@ -170,7 +169,7 @@ def extract_stage(pages_df, run_id: str = "run", metrics_dir: str | None = None)
 
         pages_df = pages_df.withColumn("salt", salt_col("url"))
     # column-prune the Python boundary: only what the extractor needs
-    slim = pages_df.select("url", "warc_ts", "html", "salt")
+    slim = pages_df.select(*_IN_COLS)
     return slim.mapInPandas(
         make_extract_batches(run_id, metrics_dir), schema=EXTRACTED_SCHEMA
     )

@@ -1241,7 +1241,6 @@ def q_extract_archetypes(spark, sf_dir):
     reaches, hash-checked by the driver against pure SQL."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     p2 = F.trim(F.substring("text", 1, 120))
     li1 = F.trim(F.substring("text", 1, 60))
@@ -1289,7 +1288,6 @@ def q_extract_blocks(spark, sf_dir):
     hash-checks three distinct block-structure paths through A-4..A-8."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     quote = F.trim(F.substring("text", 1, 80))
     l1 = F.trim(F.substring("text", 1, 50))
@@ -1336,7 +1334,6 @@ def q_extract_table(spark, sf_dir):
     and heading+table block structures through A-4..A-8."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     c1 = F.trim(F.substring("text", 1, 40))
     c2 = F.trim(F.substring("text", 41, 40))
@@ -1409,7 +1406,6 @@ def q_extract_meta(spark, sf_dir):
     the author normalizer hash-fails the driver gate."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     month = F.lpad((F.col("doc_id") % 12 + 1).cast("string"), 2, "0")
@@ -1527,7 +1523,6 @@ def q_extract_jsonld(spark, sf_dir):
     Article-type filter hash-fails the gate."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     day = F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0")
@@ -1596,7 +1591,6 @@ def q_extract_embed(spark, sf_dir):
     driver gate."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     discovery = F.when(
@@ -1672,7 +1666,6 @@ def q_extract_feeds(spark, sf_dir):
     normalization or ordered dedup hash-fails the driver gate."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m = F.col("doc_id") % 4
@@ -1769,7 +1762,6 @@ def q_extract_charset(spark, sf_dir):
     precedence order, or BOM leak on every affected row."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m = F.col("doc_id") % 4
@@ -1834,7 +1826,6 @@ def q_extract_keywords(spark, sf_dir):
     q_extract_keywords_text.)"""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     html = F.encode(
@@ -1943,7 +1934,6 @@ def q_extract_keywords_text(spark, sf_dir):
     (left join vs the extractor's empty-list→unset A-22 rule)."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     html = F.encode(
@@ -1994,7 +1984,6 @@ def q_extract_pdf(spark, sf_dir):
     Compressed filter chains get their own gate (q_extract_pdf_flate)."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     s1 = F.substring("text", 1, 20)
@@ -2056,7 +2045,6 @@ def q_extract_pdf_flate(spark, sf_dir):
 
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
 
     @F.pandas_udf("binary")
@@ -2112,7 +2100,6 @@ def q_extract_pdf_chain(spark, sf_dir):
 
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
 
     @F.pandas_udf("binary")
@@ -2169,7 +2156,6 @@ def q_extract_pdf_tm(spark, sf_dir):
     UDF); the oracle replays the construction."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     s1 = F.substring("text", 1, 40)
@@ -2217,7 +2203,6 @@ def q_metrics_rollup(spark, sf_dir):
     metrics table records per partition."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents")
     mod = F.col("doc_id") % 13
     ok_html = F.encode(
@@ -2286,7 +2271,6 @@ def q_extract_clientmeta(spark, sf_dir):
     project four columns. No join, no window."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m3 = F.col("doc_id") % 3
@@ -2390,7 +2374,6 @@ def q_extract_robotsmeta(spark, sf_dir):
     synthesis, one salted mapInPandas pass, project five columns."""
     from readembedability_spark.operators.extract import extract_stage
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m4 = F.col("doc_id") % 4

@@ -3763,18 +3763,6 @@ def q_multimodal_meta(spark, sf_dir):
     )
 
 
-def decode_image_stub(payload: bytes) -> dict:
-    """Placeholder for a real image decode (PIL/opencv unavailable).
-
-    At deployment, replace with a Pandas-UDF-wrapped decoder; the
-    pipeline plumbing (binary column in, struct metadata out, Arrow
-    batching) is exercised by q_multimodal_meta.
-    """
-    raise NotImplementedError(
-        "image decode requires an imaging library not present in this sandbox"
-    )
-
-
 # ---------------------------------------------------------------------------
 # O-9: oEmbed providers broadcast join (the A-16 registry as a dim table)
 # ---------------------------------------------------------------------------

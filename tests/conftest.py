@@ -18,17 +18,12 @@ EXPECTED = REPO / "tests" / "expected"
 @pytest.fixture(scope="session")
 def spark():
     """Shared local SparkSession (created once per test session)."""
-    from pyspark.sql import SparkSession
+    from readembedability_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("readembedability-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    spark = get_session(
+        "readembedability-spark-tests",
+        "local[4]",
+        {"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
     )
     yield spark
     spark.stop()

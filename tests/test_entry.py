@@ -58,3 +58,19 @@ def test_gate_priority_invariants():
         assert name in osql, f"gate entry {name} lacks an oracle"
     for name in BASELINE_REGISTRY:
         assert name not in qs and name not in osql
+
+
+def test_driver_surface_digest():
+    """The correctness gate reads ``queries()`` in order and every
+    ``oracle_sql()`` string; a refactor must leave both byte-identical.
+    Recompute the digest only for a deliberate, documented change."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for name in entrymod.queries():
+        h.update(name.encode() + b"\n")
+    for name, sql in entrymod.oracle_sql().items():
+        h.update(b"\0" + name.encode() + b"\0" + sql.encode())
+    assert h.hexdigest() == (
+        "83a4e4ac8f068a3062662386964f2431eb3d7de080271226574fa161f470fc8e"
+    )
